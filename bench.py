@@ -730,7 +730,8 @@ def main() -> None:
     # pipeline), so construction_s[fam] is "when the wall is paid"
     # (query wall ≈ construction + noop-write residue; the write then
     # reuses the checkpoints), NOT the family's marginal price — that
-    # stays full-vs-excluded (the twin / dictd_price_probe numbers).
+    # stays full-vs-excluded (the twin numbers; SCALING.md "dictD price
+    # spread reconciled").
     EAGER_FAMILIES: dict[str, dict[str, frozenset[str]]] = {
         "t01_token_stats": {
             "dictD": frozenset({"dictD", "mergeD", "encodeD", "inferD", "decodeD"}),

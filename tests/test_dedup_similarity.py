@@ -11,10 +11,16 @@ from wfc3_cte_monitor_spark.functions.dedup import (
     candidate_pairs,
     lsh_bands,
     minhash_signature,
+    minhash_signature_pairs,
     simhash16,
 )
 from wfc3_cte_monitor_spark.functions.similarity import cosine_topk
-from wfc3_cte_monitor_spark.functions.text import shingles, tokens
+from wfc3_cte_monitor_spark.functions.text import (
+    exploded_shingles,
+    portable_hash64,
+    shingles,
+    tokens,
+)
 from wfc3_cte_monitor_spark.sources.catalog import load_table
 
 
@@ -47,6 +53,20 @@ def test_minhash_lsh_finds_planted_dups(corpus_with_dups):
     assert (5, 200005) in pairs
     # and candidates stay sparse (no all-pairs explosion on unrelated docs)
     assert len(pairs) < 100
+
+
+def test_minhash_portable_hash_col_matches_computed_path(corpus_with_dups):
+    # portable_hash_col= is a caller contract: the named column must hold
+    # portable_hash64(shingle). Honoured, it yields exactly the signatures
+    # of the path that hashes the shingles itself.
+    sh = exploded_shingles(corpus_with_dups.where(F.col("doc_id") < 20), "doc_id", "text", 3)
+    computed = minhash_signature_pairs(sh, "doc_id")
+    pre = minhash_signature_pairs(
+        sh.withColumn("shid", portable_hash64("shingle")), "doc_id",
+        portable_hash_col="shid",
+    )
+    got, want = sorted(pre.collect()), sorted(computed.collect())
+    assert len(want) > 10 and got == want
 
 
 def test_simhash_exact_dup_collides(corpus_with_dups):

@@ -1,15 +1,18 @@
-"""Focused tests for the r13 EXACT-COLLAPSE-FIRST optimizations.
+"""Focused tests for the EXACT-COLLAPSE-FIRST optimization.
 
 The sf10 scale ladder showed that byte-identical content (100-clone
 groups under pure corpus duplication) makes every signature-bucket
 self-join quadratic in clone-group size — e02's near-dup join spilled
 past the free disk and died. The remedy collapses exact-duplicate
-groups BEFORE the fuzzy stage and expands membership afterwards, in
-three places: ``functions.similarity.neardup_pairs`` (e02),
-``plans.dedup_queries.d02_lsh_dedup_pipeline`` (verify stage), and
-d03's fuzzy arm. The collapse must be OUTPUT-INVISIBLE; these tests
-exercise it on corpora with real clone clusters, which the shipped
-test data mostly lacks (sf0.01 has zero duplicate texts/vectors).
+groups BEFORE the fuzzy stage and expands membership afterwards, through
+one operator (``functions.dedup.content_groups`` with
+``expand_pairs``/``expand_rows``) used in four places:
+``functions.similarity.neardup_pairs`` (e02),
+``plans.dedup_queries.d02_lsh_dedup_pipeline`` (verify stage), d03's
+document arms and d03's fuzzy arm. The collapse must be
+OUTPUT-INVISIBLE; these tests exercise the operator directly and the
+queries on corpora with real clone clusters, which the shipped test
+data mostly lacks (sf0.01 has zero duplicate texts/vectors).
 """
 
 from __future__ import annotations
@@ -18,6 +21,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from wfc3_cte_monitor_spark.sources.catalog import TABLES, table_path
 
@@ -108,7 +112,7 @@ _ADAPTIVE = ("d02_lsh_dedup_pipeline", "d03_minhash_lsh", "e02_ann_neardup")
 
 
 @pytest.mark.parametrize("name", _ADAPTIVE)
-def test_direct_branch_matches_oracle_on_clone_corpus(spark, clone_dir, name):
+def test_direct_branch_matches_oracle_on_clone_corpus(spark, clone_dir, name, monkeypatch):
     # r14 duplication-adaptive collapse: the DIRECT (pre-collapse)
     # branch must stay correct on clone-heavy data too — it is the
     # plan the probe would never pick there, but both branches carry
@@ -117,29 +121,21 @@ def test_direct_branch_matches_oracle_on_clone_corpus(spark, clone_dir, name):
     from wfc3_cte_monitor_spark.functions import dedup as fd
     from wfc3_cte_monitor_spark.testing.oracle import compare_query
 
-    old = fd.FORCE_COLLAPSE
-    fd.FORCE_COLLAPSE = False
-    try:
-        res = compare_query(spark, name, clone_dir)
-    finally:
-        fd.FORCE_COLLAPSE = old
+    monkeypatch.setattr(fd, "FORCE_COLLAPSE", False)
+    res = compare_query(spark, name, clone_dir)
     assert res.ok, str(res)
     assert res.spark_rows > 0
 
 
 @pytest.mark.parametrize("name", _ADAPTIVE)
-def test_collapsed_branch_matches_oracle_on_unique_corpus(spark, name):
+def test_collapsed_branch_matches_oracle_on_unique_corpus(spark, sf_smoke, name, monkeypatch):
     # ... and the COLLAPSED branch must stay correct on duplicate-free
     # data (identity groups: every expansion degenerates to a no-op).
     from wfc3_cte_monitor_spark.functions import dedup as fd
     from wfc3_cte_monitor_spark.testing.oracle import compare_query
 
-    old = fd.FORCE_COLLAPSE
-    fd.FORCE_COLLAPSE = True
-    try:
-        res = compare_query(spark, name, "/root/testdata/sf0.001")
-    finally:
-        fd.FORCE_COLLAPSE = old
+    monkeypatch.setattr(fd, "FORCE_COLLAPSE", True)
+    res = compare_query(spark, name, sf_smoke)
     assert res.ok, str(res)
     assert res.spark_rows > 0
 
@@ -202,3 +198,96 @@ def test_neardup_pairs_clone_clusters_match_numpy(spark):
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 2e-6, (k, got[k], want[k])
+
+
+# --- the operator itself -----------------------------------------------------
+
+# contents at interleaved ids: 'aaaa' ×3, 'bb' ×2, 'cccccc' ×1
+_UNITS = [(7, "aaaa"), (2, "bb"), (30, "aaaa"), (11, "cccccc"), (5, "aaaa"), (40, "bb")]
+
+
+def _units_df(spark):
+    return spark.createDataFrame(_UNITS, "id long, content string")
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_content_groups_identity_adds_no_join_or_exchange(spark):
+    from wfc3_cte_monitor_spark.functions.dedup import (
+        content_groups,
+        expand_pairs,
+        expand_rows,
+    )
+
+    df = _units_df(spark)
+    units, members = content_groups(df, "id", "content", False)
+    assert members is None
+    plan = _plan(units)
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    assert sorted(units.collect()) == sorted(
+        (i, c, 1) for i, c in _UNITS
+    )
+    pairs = spark.createDataFrame([(2, 7, 0.5)], "id_a long, id_b long, v double")
+    assert expand_pairs(pairs, None, F.lit(False)) is pairs
+    rows = expand_rows(units.select("gid", "gsz"), None, "id")
+    assert "Join" not in _plan(rows) and rows.columns == ["id", "gsz"]
+
+
+def test_content_groups_collapsed_expands_each_member_pair_once(spark):
+    from wfc3_cte_monitor_spark.functions.dedup import (
+        content_groups,
+        expand_pairs,
+        expand_rows,
+    )
+
+    units, members = content_groups(_units_df(spark), "id", "content", True)
+    assert sorted(units.collect()) == [(2, "bb", 2), (5, "aaaa", 3), (11, "cccccc", 1)]
+    # one unit pair across the 'aaaa' and 'bb' groups, gid order reversed
+    # against several member orders
+    gpairs = spark.createDataFrame([(2, 5, 0.9)], "id_a long, id_b long, v double")
+    got = [tuple(r) for r in
+           expand_pairs(gpairs, members, intra=(F.lit(1.0).alias("v"),)).collect()]
+    assert len(got) == len(set((a, b) for a, b, _ in got)), "pair emitted twice"
+    assert all(a < b for a, b, _ in got)
+    a_ids, b_ids = [5, 7, 30], [2, 40]
+    inter = {(min(x, y), max(x, y), 0.9) for x in a_ids for y in b_ids}
+    intra = {(5, 7, 1.0), (5, 30, 1.0), (7, 30, 1.0), (2, 40, 1.0)}
+    assert set(got) == inter | intra
+    rows = {tuple(r) for r in expand_rows(units.select("gid", "gsz"), members, "id").collect()}
+    assert rows == {(i, {"aaaa": 3, "bb": 2, "cccccc": 1}[c]) for i, c in _UNITS}
+
+
+def test_expand_pairs_guard_suppresses_intra_pairs(spark):
+    from wfc3_cte_monitor_spark.functions.dedup import content_groups, expand_pairs
+
+    _, members = content_groups(
+        _units_df(spark), "id", "content", True,
+        flags={"long": F.length("content") >= 4},
+    )
+    none = spark.createDataFrame([], "id_a long, id_b long")
+    got = {tuple(r) for r in expand_pairs(none, members, F.col("long")).collect()}
+    # the 2-char 'bb' group's guard is false: no (2, 40) pair
+    assert got == {(5, 7), (5, 30), (7, 30)}
+
+
+def test_content_groups_never_merges_contents_of_different_length(spark, monkeypatch):
+    # A fingerprint collision must not merge contents the structural
+    # discriminator (length for strings, size for arrays) tells apart:
+    # with every fingerprint forced to one constant pair, groups are
+    # exactly the distinct lengths.
+    from wfc3_cte_monitor_spark.functions import dedup as fd
+
+    monkeypatch.setattr(fd, "fingerprint128", lambda c: (F.lit(1).cast("bigint"),) * 2)
+    units, members = fd.content_groups(_units_df(spark), "id", "content", True)
+    assert sorted((r.gid, r.gsz) for r in units.collect()) == [(2, 2), (5, 3), (11, 1)]
+    assert {r.id: r.gid for r in members.collect()} == {
+        7: 5, 30: 5, 5: 5, 2: 2, 40: 2, 11: 11,
+    }
+    vecs = spark.createDataFrame(
+        [(1, [0.5]), (2, [0.5, 0.5]), (3, [0.25])], "id long, v array<double>"
+    )
+    vunits, _ = fd.content_groups(vecs, "id", "v", True)
+    # same size merges under the forced collision; different sizes never do
+    assert sorted((r.gid, r.gsz) for r in vunits.collect()) == [(1, 2), (2, 1)]

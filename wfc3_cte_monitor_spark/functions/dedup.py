@@ -22,7 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
+from ..checkpointing import materialize
 from .text import portable_hash64, portable_hash64_sql
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime
@@ -30,32 +32,32 @@ MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime
 N_HASHES = 16
 BAND_SIZE = 4  # 4 bands × 4 rows
 
-# Second-seed discriminator for fingerprint128 (any fixed literal works;
+# Second-seed discriminator for fingerprint128 (any fixed literal works:
 # xxhash64 folds every argument into one stream, so prepending a
-# distinct constant yields an independent second 64-bit hash).
+# constant re-seeds the hash of the same content).
 _FP_SEED2 = 0x9E3779B9
 
 
 def fingerprint128(col: str | Column) -> tuple[Column, Column]:
-    """Two independent 64-bit ``xxhash64`` fingerprints of a column —
-    the exact-collapse group key (r13 verdict ask #1).
+    """Two 64-bit ``xxhash64`` fingerprints of a column — the content
+    part of :func:`content_groups`' group key.
 
-    The r13 collapses keyed the group id with ``min(id) OVER (PARTITION
-    BY <content>)``: WindowExec has no map-side combine, so every
-    clone's FULL payload (text / vector) rode the exchange and a
-    mega-clone group landed on one reducer — the collapse's own shuffle
-    inherited the hot key it exists to remove. Grouping on this
-    fingerprint instead lets ``groupBy(fp).agg(min(id), min_by(...))``
-    partially aggregate map-side (one row per distinct content per map
-    partition crosses the wire) and keeps membership joins on bigints.
+    Grouping on a fingerprint (not ``min(id) OVER (PARTITION BY
+    <content>)``) lets ``groupBy(fp).agg(min(id), min_by(...))``
+    partially aggregate map-side: one row per distinct content per map
+    partition crosses the wire, a mega-clone group never lands its
+    payloads on one reducer, and membership joins stay on bigints.
 
-    128 bits, not 64: at 100 TB corpus sizes (~5e10 documents) a single
-    64-bit hash collides by the birthday bound (expected at ~2^32
-    rows); two independent xxhash64 values push the collision
-    probability below 1e-17 at that scale, so grouping by the pair is
-    grouping by content. xxhash64 handles strings and arrays alike
-    (arrays hash element-wise), which covers text, names and embedding
-    vectors with one definition.
+    The two values are the SAME non-cryptographic function under two
+    seeds, so they are correlated, not independent: the pair is not a
+    proven 128-bit key. At 100 TB corpus sizes (~5e10 documents) a
+    single 64-bit hash collides by the birthday bound (expected at
+    ~2^32 rows); the seeded pair makes an accidental collision on
+    non-adversarial content far rarer, and :func:`content_groups`
+    adds the content's length (strings) or size (arrays) to the key so
+    a collision can only merge contents of the same length. xxhash64
+    handles strings and arrays alike (arrays hash element-wise), which
+    covers text, names and embedding vectors with one definition.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.xxhash64(c), F.xxhash64(F.lit(_FP_SEED2), c)
@@ -131,6 +133,119 @@ def has_dup_groups(df: DataFrame, content_col: str) -> bool:
     )
 
 
+# --- the exact-collapse operator ----------------------------------------------
+#
+# Every fuzzy-dedup site (d02's verify stage, d03's document and fuzzy
+# arms, e02's near-dup join) runs its signature/candidate/verify work
+# over UNITS — one row per distinct content — and expands the result
+# back to ids. Byte-identical contents get identical shingles,
+# signatures, bands and vectors, so without the collapse a k-clone
+# group inflates every bucket self-join by C(k, 2) and re-pays the
+# per-row work k times. Expansion is exact: unit pairs map to every
+# member pair, and pairs inside one group (identical content) carry
+# the metric's by-construction value. When the probe finds the corpus
+# (nearly) duplicate-free the same code runs on the identity units
+# (gid = id, gsz = 1) and both expansions are no-ops, so the plan is
+# the plain id-granularity plan.
+
+
+def content_groups(df: DataFrame, id_col: str, content_col: str, collapsed: bool,
+                   flags: dict[str, Column] | None = None,
+                   broadcast: bool = False) -> tuple[DataFrame, DataFrame | None]:
+    """``(units, members)`` for the exact collapse of ``df`` on
+    ``content_col``.
+
+    ``units`` has columns ``(gid, <content_col>, gsz)``: one row per
+    distinct content, ``gid`` = its smallest member id, ``gsz`` = its
+    member count. ``members`` has columns ``(<id_col>, gid, *flags)``;
+    ``flags`` are row-local expressions over the content, evaluated
+    once per unit and carried to every member (bigints and flags ride
+    the membership join, never the content).
+
+    ``collapsed=False`` (the probe's duplicate-free verdict) returns
+    ``df`` itself as units (``gid`` = id, ``gsz`` = 1) and ``members =
+    None``: no aggregate, no join. Collapsed units are materialized
+    (every caller reads them several times); whether to materialize
+    ``members`` is the caller's choice. ``broadcast=True`` hints the
+    membership join for a tiny unit relation (a names table).
+
+    The group key is the content fingerprint plus its length (strings)
+    or size (arrays): a fingerprint collision can merge only contents
+    of equal length (see :func:`fingerprint128`)."""
+    if not collapsed:
+        return df.select(
+            F.col(id_col).alias("gid"), content_col, F.lit(1).alias("gsz")
+        ), None
+    c = F.col(content_col)
+    shape = F.size(c) if isinstance(df.schema[content_col].dataType, ArrayType) else F.length(c)
+    f1, f2 = fingerprint128(c)
+    key = ["_f1", "_f2", "_len"]
+    # NULL content groups like any other (xxhash64 of NULL is its seed);
+    # the coalesce keeps the NULL group joinable on _len
+    keyed = df.select(id_col, content_col, f1.alias("_f1"), f2.alias("_f2"),
+                      F.coalesce(shape, F.lit(-1)).alias("_len"))
+    groups = (
+        keyed.groupBy(*key)
+        .agg(
+            F.min(id_col).alias("gid"),
+            F.min_by(content_col, id_col).alias(content_col),
+            F.count(F.lit(1)).alias("gsz"),
+        )
+        .transform(materialize)
+    )
+    g = groups.select(*key, "gid", *[e.alias(n) for n, e in (flags or {}).items()])
+    members = (
+        keyed.select(id_col, *key)
+        .join(F.broadcast(g) if broadcast else g, key)
+        .drop(*key)
+    )
+    return groups.select("gid", content_col, "gsz"), members
+
+
+def expand_pairs(gpairs: DataFrame, members: DataFrame | None,
+                 guard: Column | None = None,
+                 intra: tuple[Column, ...] = ()) -> DataFrame:
+    """Unit pairs ``(id_a, id_b, *values)`` → member pairs.
+
+    Inter-group: every member pair of two paired units, re-ordered on
+    the ORIGINAL ids (gid ranges interleave, so ``least``/``greatest``
+    — not the gid order — restores ``id_a < id_b``); each id is in
+    exactly one group, so no pair is emitted twice. Intra-group: every
+    member pair inside one unit whose members pass ``guard`` (a
+    predicate over the flags: e.g. "the content yields a signature at
+    all"), valued by ``intra`` — expressions over the member row naming
+    the same value columns as ``gpairs``. ``members=None`` (identity
+    units) returns ``gpairs`` unchanged."""
+    if members is None:
+        return gpairs
+    mid = members.columns[0]
+    values = [c for c in gpairs.columns if c not in ("id_a", "id_b")]
+    inter = (
+        gpairs
+        .join(members.select(F.col("gid").alias("id_a"), F.col(mid).alias("_ia")), "id_a")
+        .join(members.select(F.col("gid").alias("id_b"), F.col(mid).alias("_ib")), "id_b")
+        .select(F.least("_ia", "_ib").alias("id_a"),
+                F.greatest("_ia", "_ib").alias("id_b"), *values)
+    )
+    m = members if guard is None else members.where(guard)
+    intra_pairs = (
+        m.select("gid", F.col(mid).alias("id_a"), *intra)
+        .join(m.select("gid", F.col(mid).alias("id_b")), "gid")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *values)
+    )
+    return inter.unionByName(intra_pairs)
+
+
+def expand_rows(grows: DataFrame, members: DataFrame | None, id_col: str) -> DataFrame:
+    """Per-unit rows keyed by ``gid`` → per-member rows keyed by
+    ``id_col`` (a row-level fact of the content holds for every member).
+    ``members=None`` (identity units) only renames ``gid``."""
+    if members is None:
+        return grows.withColumnRenamed("gid", id_col)
+    return members.select(id_col, "gid").join(grows, "gid").drop("gid")
+
+
 def _perm_params(n: int = N_HASHES) -> list[tuple[int, int]]:
     """Deterministic (a, b) for h_i(x) = (a*x + b) mod M — integer
     arithmetic only so Spark and DuckDB agree bit for bit."""
@@ -148,24 +263,28 @@ def minhash_signature(df: DataFrame, id_col: str, shingle_col: Column,
     return minhash_signature_pairs(exploded, id_col, "shingle", n_hashes)
 
 
-def minhash_signature_pairs(pairs: DataFrame, id_col: str, shingle_col: str = "shingle",
-                            n_hashes: int = N_HASHES,
-                            hash_col: str | None = None) -> DataFrame:
+def minhash_signature_pairs(pairs: DataFrame, id_col: str | list[str],
+                            shingle_col: str = "shingle", n_hashes: int = N_HASHES,
+                            portable_hash_col: str | None = None) -> DataFrame:
     """MinHash from pre-exploded (id, shingle) rows — the hot path used
     with text.exploded_shingles (codegen shingling, no per-element
-    lambda). ``hash_col`` names a column already holding
-    ``portable_hash64(shingle)`` — callers whose shingle relation
-    carries the 60-bit hash anyway (d03 materializes it for the
-    dupfrac count) skip a duplicate md5 pass over every
-    (id, shingle) row."""
-    base = F.col(hash_col) if hash_col else portable_hash64(F.col(shingle_col))
+    lambda). ``id_col`` may list extra columns that are functions of
+    the id; they ride along as group keys. ``portable_hash_col`` names
+    a column that MUST hold ``portable_hash64(shingle_col)`` — the
+    value the DuckDB twin recomputes — so callers whose shingle
+    relation carries that hash anyway (d03 materializes it for the
+    dupfrac count) skip a duplicate md5 pass over every (id, shingle)
+    row; any other column silently breaks oracle parity."""
+    keys = [id_col] if isinstance(id_col, str) else list(id_col)
+    base = (F.col(portable_hash_col) if portable_hash_col
+            else portable_hash64(F.col(shingle_col)))
     h31 = (base % MERSENNE31).alias("_h")
-    hashed = pairs.select(id_col, h31)
+    hashed = pairs.select(*keys, h31)
     aggs = [
         F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MERSENNE31).alias(f"mh_{i}")
         for i, (a, b) in enumerate(_perm_params(n_hashes))
     ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy(*keys).agg(*aggs)
 
 
 def minhash_signature_sql(source: str, id_col: str, shingle_expr: str,
@@ -187,10 +306,12 @@ def minhash_signature_sql(source: str, id_col: str, shingle_expr: str,
     """
 
 
-def lsh_bands(sig: DataFrame, id_col: str, n_hashes: int = N_HASHES,
+def lsh_bands(sig: DataFrame, id_col: str | list[str], n_hashes: int = N_HASHES,
               band_size: int = BAND_SIZE) -> DataFrame:
     """Signature → (id, band_id, band_key): docs sharing a band_key are
-    near-dup candidates. band_key is the concatenated band slice."""
+    near-dup candidates. band_key is the concatenated band slice.
+    ``id_col`` may list extra per-id columns to carry."""
+    keys = [id_col] if isinstance(id_col, str) else list(id_col)
     n_bands = n_hashes // band_size
     bands = F.array(*[
         F.struct(
@@ -199,8 +320,8 @@ def lsh_bands(sig: DataFrame, id_col: str, n_hashes: int = N_HASHES,
         )
         for b in range(n_bands)
     ])
-    return sig.select(id_col, F.explode(bands).alias("_b")).select(
-        id_col, F.col("_b.band_id").alias("band_id"), F.col("_b.band_key").alias("band_key")
+    return sig.select(*keys, F.explode(bands).alias("_b")).select(
+        *keys, F.col("_b.band_id").alias("band_id"), F.col("_b.band_key").alias("band_key")
     )
 
 

@@ -226,54 +226,30 @@ def neardup_pairs(embeddings: DataFrame, tau: float, id_col: str = "vec_id",
     survives a 100 TB corpus; at scale the index is written bucketed by
     (table_id, bucket) so the self-join is co-located, shuffle-free.
 
-    RE-KEYED on a 128-bit content fingerprint (r13 verdict ask #1): the
-    r13 form (min(vec_id) OVER (PARTITION BY v)) shuffled the full
-    array<double> payload with no map-side combine, so a mega-clone
-    group landed on ONE reducer holding every clone's vector — the
-    collapse's own shuffle inherited the hot key it exists to remove.
-    groupBy(fingerprint) + min/min_by partially aggregates map-side
-    (one row per distinct vector per map partition crosses the wire)
-    and the membership join-back moves bigints only. See
-    functions/dedup.fingerprint128 for the collision argument.
-
-    DUPLICATION-ADAPTIVE (r14): the collapse engages only when the
-    corpus actually contains byte-identical vector groups
-    (functions/dedup.has_dup_groups — one bigint fingerprint aggregate
-    at plan build); on a duplicate-free corpus the pre-collapse plan
-    runs (membership would be the identity and the group/expansion
-    machinery pure fixed overhead). Both branches compute identical
-    results on any input."""
-    from .dedup import fingerprint128, has_dup_groups
+    The collapse is functions/dedup.content_groups (fingerprint-keyed,
+    map-side combinable; vectors never ride the membership join) and
+    is DUPLICATION-ADAPTIVE: it engages only when the probe
+    (functions/dedup.has_dup_groups, one bigint fingerprint aggregate at
+    plan build) finds byte-identical vector groups; otherwise the same
+    code runs on identity units and the expansion is a no-op."""
+    from .dedup import content_groups, expand_pairs, has_dup_groups
 
     src = embeddings.select(F.col(id_col).alias("vec_id"),
                             F.col(emb_col).cast("array<double>").alias("v"))
     collapsed = has_dup_groups(src.select("v"), "v")
+    cos = cosine_pd()
+    # INTRA-group pairs: clones share every bucket, so every intra-group
+    # pair was a candidate; its sim is cosine(v, v) — computed ONCE per
+    # group with the same kernel the pair path uses and carried on the
+    # membership relation (materialized: four expansion consumers)
+    units, members = content_groups(
+        src, "vec_id", "v", collapsed,
+        flags={"sim": F.round(cos(F.col("v"), F.col("v")), 6)},
+    )
     if collapsed:
-        f1, f2 = fingerprint128("v")
-        sfp = src.select("vec_id", "v", f1.alias("_f1"), f2.alias("_f2"))
-        # groups: one row per distinct vector, gid = min member id;
-        # materialized because the index, both verify vector fetches
-        # and the intra gsim pass all read the reps projection.
-        groups = (
-            sfp.groupBy("_f1", "_f2")
-            .agg(F.min("vec_id").alias("gid"), F.min_by("v", "vec_id").alias("v"))
-            .transform(materialize)
-        )
-        reps = groups.select(F.col("gid").alias("vec_id"), "v")
-        # membership (vec_id → gid): a narrow bigint join, materialized
-        # — four downstream consumers (two inter-expansion sides, the
-        # intra self-join's two sides). Vectors never ride it.
-        members = (
-            sfp.select("vec_id", "_f1", "_f2")
-            .join(groups.select("_f1", "_f2", "gid"), ["_f1", "_f2"])
-            .select("vec_id", "gid")
-            .transform(materialize)
-        )
-    else:
-        # duplicate-free corpus: every vector is its own group
-        reps = src
+        members = materialize(members)
 
-    idx = lsh_index(reps, "vec_id", "v", dim,
+    idx = lsh_index(units, "gid", "v", dim,
                     n_tables=ND_TABLES, n_planes=ND_PLANES, seed=_ND_SEED)
     # the index feeds both sides of the bucket self-join — materialize the
     # pruned (id, table, bucket) layout once (lazily) so the Arrow bucket
@@ -291,47 +267,14 @@ def neardup_pairs(embeddings: DataFrame, tau: float, id_col: str = "vec_id",
         .where(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    va = reps.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    vb = reps.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    cos = cosine_pd()
+    va = units.select(F.col("gid").alias("id_a"), F.col("v").alias("va"))
+    vb = units.select(F.col("gid").alias("id_b"), F.col("v").alias("vb"))
     gpairs = (
         cands.join(va, "id_a").join(vb, "id_b")
         .select("id_a", "id_b", F.round(cos(F.col("va"), F.col("vb")), 6).alias("sim"))
         .where(F.col("sim") >= tau)
     )
-    if not collapsed:
-        # identity membership: the rep-level pairs ARE the output
-        return gpairs
-    # INTER-group expansion: every member pair across two near-dup rep
-    # groups, re-ordered on the ORIGINAL ids (group id ranges interleave,
-    # so least/greatest — not the gid order — restores id_a < id_b). Each
-    # doc belongs to exactly one group, so no pair is emitted twice.
-    inter = (
-        gpairs
-        .join(members.select(F.col("gid").alias("id_a"),
-                             F.col("vec_id").alias("ia")), "id_a")
-        .join(members.select(F.col("gid").alias("id_b"),
-                             F.col("vec_id").alias("ib")), "id_b")
-        .select(F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"), "sim")
-    )
-    # INTRA-group pairs: clones share every bucket, so every intra-group
-    # pair was a candidate in the un-collapsed plan; its sim is
-    # cosine(v, v) — computed ONCE per group with the same kernel the
-    # pair path uses (one linear Arrow pass over reps), then attached to
-    # the C(k,2) member pairs, which are output-sized by definition.
-    gsim = reps.select(
-        F.col("vec_id").alias("gid"),
-        F.round(cos(F.col("v"), F.col("v")), 6).alias("sim"),
-    ).where(F.col("sim") >= tau)
-    intra = (
-        members.select("gid", F.col("vec_id").alias("id_a"))
-        .join(members.select("gid", F.col("vec_id").alias("id_b")), "gid")
-        .where(F.col("id_a") < F.col("id_b"))
-        .join(gsim, "gid")
-        .select("id_a", "id_b", "sim")
-    )
-    return inter.unionByName(intra)
+    return expand_pairs(gpairs, members, F.col("sim") >= tau, (F.col("sim"),))
 
 
 def neardup_pairs_sql(source: str, tau: float, id_col: str = "vec_id",

@@ -78,8 +78,10 @@ def shingles_sql_inline(col: str, k: int = 3) -> str:
     )
 
 
-def exploded_shingles(df, id_col: str, text_col: str, k: int = 3):
+def exploded_shingles(df, id_col: str | list[str], text_col: str, k: int = 3):
     """(id, shingle) rows — distinct word k-gram shingles per id.
+    ``id_col`` may list extra columns that are functions of the id;
+    they ride along on every shingle row.
 
     The hot-path form for dedup pipelines: ``posexplode(tokens)`` (the
     generator evaluates the split+regexp chain ONCE per row) then a
@@ -94,11 +96,12 @@ def exploded_shingles(df, id_col: str, text_col: str, k: int = 3):
     """
     from pyspark.sql import Window
 
-    ex = df.select(id_col, F.posexplode(tokens(text_col)).alias("_pos", "_tok"))
-    w = Window.partitionBy(id_col).orderBy("_pos")
+    keys = [id_col] if isinstance(id_col, str) else list(id_col)
+    ex = df.select(*keys, F.posexplode(tokens(text_col)).alias("_pos", "_tok"))
+    w = Window.partitionBy(keys[0]).orderBy("_pos")
     parts = [F.col("_tok")] + [F.lead("_tok", j).over(w) for j in range(1, k)]
-    sh = ex.select(id_col, F.concat_ws(" ", *parts).alias("shingle"), F.lead("_tok", k - 1).over(w).alias("_last"))
-    return sh.where(F.col("_last").isNotNull()).select(id_col, "shingle").distinct()
+    sh = ex.select(*keys, F.concat_ws(" ", *parts).alias("shingle"), F.lead("_tok", k - 1).over(w).alias("_last"))
+    return sh.where(F.col("_last").isNotNull()).select(*keys, "shingle").distinct()
 
 
 # --- portable 60-bit hash ----------------------------------------------------

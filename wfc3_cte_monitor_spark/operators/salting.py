@@ -127,7 +127,13 @@ def salted_rank(
     Cost: one extra pre-pass (per-key min/max aggregate, map-side
     combinable, |keys| output rows → broadcast) and the offsets relation
     (|keys| × n_buckets rows → broadcast). All full-data exchanges hash
-    on (key, bucket): the hot key spreads across n_buckets tasks.
+    on (key, bucket): the hot key spreads across n_buckets tasks. The
+    offsets come from a predecessor-count self-join of the bucket
+    counts, which emits O(n_buckets²) rows PER GROUP (each bucket meets
+    every lower bucket of its group) and broadcasts the whole counts
+    relation: cheap for few groups and the default n_buckets, but a
+    caller with many groups or a large n_buckets pays |keys| ×
+    n_buckets² rows of broadcast-side work.
 
     Ties in ``order_col`` within one group are assigned ranks in an
     arbitrary (but bucket-stable) order — the same contract as plain
